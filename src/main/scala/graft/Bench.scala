@@ -257,8 +257,24 @@ object Bench {
     val pinnedArr = CacheRegistry.pinnedLedger.map { b =>
       s"""{"key":${Verify.jsonStr(b.key)},"payer":${Verify.jsonStr(b.payer)},"build_sec":${f(b.buildSec)}}"""
     }.mkString("[", ",", "]")
+    // JVM footprint at the end of the run, after a full collection: what
+    // the session keeps resident, the generated-code cache (its size is a
+    // build.sbt javaOption) included, and how many classes were compiled
+    val jvm = {
+      import scala.jdk.CollectionConverters._
+      import java.lang.management.{ManagementFactory => mf}
+      System.gc()
+      val mb = 1024.0 * 1024.0
+      val heap = mf.getMemoryMXBean.getHeapMemoryUsage.getUsed / mb
+      val meta = mf.getMemoryPoolMXBeans.asScala
+        .filter(_.getName == "Metaspace").map(_.getUsage.getUsed).sum / mb
+      val compiles = org.apache.spark.metrics.source.CodegenMetrics
+        .METRIC_COMPILATION_TIME.getCount
+      val codegenMax = spark.conf.get("spark.sql.codegen.cache.maxEntries")
+      s"""{"heap_used_mb":${f(heap)},"metaspace_mb":${f(meta)},"codegen_compiles":$compiles,"codegen_cache_max":$codegenMax}"""
+    }
     val line =
-      s"""{"metric":"total","value":$total,"unit":"sec","groups":$groups,"queries":$qs,"cpu":$cpuMap,"cpu_total":${f(cpuTotal)},"gc":$gcMap,"gc_total":${f(gcTotal)},"n_cpu_inflated":$nCpuInflated,"cpu_inflated":$inflatedArr,"calib_wall_ratio":${f(calWallRatio)},"n_wall_gt_cpu":$nWallGtCpu,"calibration":$calArr,"cache":$census,"pinned_builds":$pinnedArr,"pinned_build_total":${f(CacheRegistry.pinnedLedger.map(_.buildSec).sum)},"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","groups":$groups,"queries":$qs,"cpu":$cpuMap,"cpu_total":${f(cpuTotal)},"gc":$gcMap,"gc_total":${f(gcTotal)},"n_cpu_inflated":$nCpuInflated,"cpu_inflated":$inflatedArr,"calib_wall_ratio":${f(calWallRatio)},"n_wall_gt_cpu":$nWallGtCpu,"calibration":$calArr,"cache":$census,"pinned_builds":$pinnedArr,"pinned_build_total":${f(CacheRegistry.pinnedLedger.map(_.buildSec).sum)},"jvm":$jvm,"sf":"$sfDir"}"""
     println(line)
     // belt-and-braces channel for the driver: the same line, unframed, on disk
     java.nio.file.Files.write(java.nio.file.Paths.get("bench_out.json"),

@@ -244,10 +244,7 @@ object StreamIngestQueries {
     // one declarative transform, two execution modes.
     "stream_dsv2_source" -> ((s, dir) => {
       val name = "graft_stream_dsv2"
-      val key = "spark.sql.shuffle.partitions"
-      val old = s.conf.get(key)
-      s.conf.set(key, "8")
-      try {
+      graft.streaming.EventStream.withStatePartitions(s, 8) {
         val q = s.readStream.format("graft-series")
           .option("symbols", "SPY,QQQ")
           .option("start", "2026-01-05")
@@ -266,7 +263,7 @@ object StreamIngestQueries {
           .format("memory").queryName(name)
           .start()
         try q.processAllAvailable() finally q.stop()
-      } finally s.conf.set(key, old)
+      }
       s.table(name).orderBy("symbol", "month")
     }),
 

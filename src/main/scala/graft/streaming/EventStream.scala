@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.ArtifactBridge
 import org.apache.spark.sql.types._
 
 /** Structured Streaming over the events table (north-star extension — the
@@ -34,13 +35,47 @@ object EventStream {
     * fixture replays carry a few thousand state rows; 8 partitions keeps
     * the per-batch commit cost proportionate (32 was pure overhead). A
     * production deployment sizes this once per query the same way.
+    *
+    * The scope is every streaming run's session posture; a query copies
+    * it when it starts (its cloned session), so `f` must start and stop
+    * its streams inside. Besides the state partitions it removes two
+    * fixed per-run costs that are not query work:
+    *  - checkpoint and state files go through [[LocalCheckpointFileManager]],
+    *    which writes the same files without forking `chmod`/`readlink`
+    *    (unless the caller already chose a manager);
+    *  - the stream's cloned session runs its tasks in the executor's
+    *    default classloader instead of a fresh per-clone one, so its
+    *    generated classes stay in the codegen cache across runs. That is
+    *    only sound when `spark` holds no session-scoped artifacts the
+    *    stream's tasks could need; otherwise isolation stays on.
+    * Every key gets back its previous value, or none, even if `f` throws.
     */
-  private[streaming] def withStatePartitions[T](spark: SparkSession,
-                                                n: Int)(f: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val old = spark.conf.get(key)
-    spark.conf.set(key, n.toString)
-    try f finally spark.conf.set(key, old)
+  private[graft] def withStatePartitions[T](spark: SparkSession,
+                                            n: Int)(f: => T): T = {
+    val manager = "spark.sql.streaming.checkpointFileManagerClass"
+    val settings = Seq(
+        "spark.sql.shuffle.partitions" -> n.toString,
+        manager -> spark.conf.getOption(manager)
+          .getOrElse(classOf[LocalCheckpointFileManager].getName)) ++
+      Option.when(ArtifactBridge.holdsNoArtifacts(spark))(
+        "spark.sql.artifact.isolation.enabled" -> "false")
+    withConf(spark, settings)(f)
+  }
+
+  /** Run `f` with `settings` applied to `spark`'s conf, then put back each
+    * key's previous value, unsetting the keys that had none. (`getAll`
+    * holds only the keys set on the session; `getOption` would report a
+    * key's default as if it were set.) */
+  private def withConf[T](spark: SparkSession,
+                          settings: Seq[(String, String)])(f: => T): T = {
+    val set = spark.conf.getAll
+    val saved = settings.map { case (k, _) => k -> set.get(k) }
+    settings.foreach { case (k, v) => spark.conf.set(k, v) }
+    try f
+    finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
   }
 
   /** Unbounded events source from a fixture dir. The glob admits both
